@@ -118,7 +118,8 @@ def search_adaptive(
     exactly as in search(); pass a value covering every probed row (e.g.
     10**6) for the provably-brute-exact configuration. `stats`, if a dict
     is passed, receives waves / probed_clusters_total /
-    avg_probes_per_query / retired_early. `max_probes` caps
+    avg_probes_per_query / retired_early / wave_kernels (the scorer each
+    wave resolved to, in wave order). `max_probes` caps
     the probed clusters per query (approximate mode — on heavily
     OVERLAPPING clusters the triangle bound is weak, radii span the gaps,
     and an uncapped run degrades toward a full scan; with the cap the
@@ -189,6 +190,7 @@ def search_adaptive(
     id_to_row = {v: i for i, v in enumerate(q_ids)}
     acc: pd.DataFrame | None = None
     waves = 0
+    wave_kernels: list[str] = []
     probed_total = 0
     wave = max(1, int(wave0))
 
@@ -306,6 +308,15 @@ def search_adaptive(
             else:
                 q_per_cluster = len(ci_arr) / max(len(np.unique(ci_arr)), 1)
                 wave_kernel = "popcount" if q_per_cluster >= 12 else "jvm"
+        if wave_kernel == "fastscan":
+            # search()'s byte cap on the unpacked query values, read at
+            # call time: past it most groups would rebuild them every
+            # batch — the popcount kernel gives identical results
+            from rabitq_spark.index.search import FASTSCAN_MAX_LUT_BYTES
+
+            if len(ci_arr) * 4 * model.dim_pad > FASTSCAN_MAX_LUT_BYTES:
+                wave_kernel = "popcount"
+        wave_kernels.append(wave_kernel)
         if wave_kernel == "jvm":
             # JVM wave scorer — search()'s stages 5-6 on the wave's probe
             # table. The Arrow shortlist pays a per-(cluster, batch) group
@@ -379,6 +390,7 @@ def search_adaptive(
         stats["avg_probes_per_query"] = probed_total / max(nq, 1)
         stats["retired_early"] = int(early_retired.sum())
         stats["forced_final_wave"] = forced_final
+        stats["wave_kernels"] = wave_kernels
 
     if acc is None:
         acc = pd.DataFrame(

@@ -18,6 +18,7 @@ centroids are broadcast once; nothing driver-sized scales with n.
 from __future__ import annotations
 
 from collections.abc import Iterator
+from dataclasses import replace as dc_replace
 
 import numpy as np
 import pandas as pd
@@ -26,8 +27,9 @@ from pyspark.sql import functions as F
 
 from rabitq_spark._dist import ensure_package_on_executors
 from rabitq_spark.config import RaBitQConfig
+from rabitq_spark.functions.vector import pad_to_multiple
 from rabitq_spark.index.model import RaBitQModel
-from rabitq_spark.index.rotation import apply_rot, apply_rot_T
+from rabitq_spark.index.rotation import apply_rot
 
 INDEX_SCHEMA = (
     "cluster_id int, orig_id bigint, code array<bigint>, "
@@ -165,75 +167,108 @@ def _kmeans_centroids(
     return _numpy_lloyd(x, k, seed)
 
 
-def append_to_index(model: RaBitQModel, new_base: DataFrame,
-                    id_col: str = "id", vec_col: str = "vec") -> RaBitQModel:
-    """Incrementally index new vectors into an existing model.
+def _pad_base(
+    base: DataFrame, id_col: str, vec_col: str, attr_cols: list[str], dim: int
+) -> DataFrame:
+    """The stored base layout: (orig_id, vec zero-padded to a multiple of
+    64, *attr_cols) — P5 zero-padding (src/rabitq.rs:167-179)."""
+    return base.select(
+        F.col(id_col).alias("orig_id"),
+        pad_to_multiple(F.col(vec_col), 64, dim).alias("vec"),
+        *attr_cols,
+    )
 
-    The reference leaves insert/update/delete unimplemented (README.md:18
-    unchecked); in Spark this is natural: quantize the new batch with the
-    FROZEN trained state (same centroids, rotation, bias — so existing codes
-    stay valid) and union the index/base DataFrames. On disk this is an
-    append of new Parquet files into the cluster_id partitions; no existing
-    data is rewritten. Recall degrades only if the data distribution drifts
-    from the trained centroids — the standard IVF contract.
 
-    Carried attribute columns (build_index(attr_cols=...)) survive the
-    append: attrs present in `new_base` ride along; attrs the batch lacks
-    are NULL (so metadata predicates exclude them — standard semantics).
-    """
+def _materialize_batch(
+    model: RaBitQModel, new_base: DataFrame, id_col: str, vec_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """Evaluate a write's batch exactly once: pad it and checkpoint the
+    rows, quantize the checkpoint with the model's FROZEN transform (same
+    centroids, rotation, bias — so existing codes stay valid) and
+    checkpoint the codes. Returns (base rows, index rows), both
+    executor-held blocks with no lineage back to `new_base`.
+
+    Carried attribute columns (build_index(attr_cols=...)) ride along when
+    `new_base` has them; attrs the batch lacks are NULL (so metadata
+    predicates exclude them — standard semantics)."""
     attr_cols = [c for c in model.index_df.columns if c not in _STD_INDEX_COLS]
     for c in attr_cols:
         if c not in new_base.columns:
             new_base = new_base.withColumn(
                 c, F.lit(None).cast(model.index_df.schema[c].dataType)
             )
-    appended = build_index(
-        new_base,
+    rows = _pad_base(new_base, id_col, vec_col, attr_cols, model.dim)
+    rows = rows.localCheckpoint(eager=True)
+    codes = build_index(
+        rows,
         model.config,
-        id_col=id_col,
-        vec_col=vec_col,
-        dim=model.dim,
-        centroids=apply_rot_T(model.centroids_proj, model.rotation),  # undo projection
-        debug_deterministic=False,
+        id_col="orig_id",
+        vec_col="vec",
+        dim=model.dim_pad,  # already padded
         attr_cols=attr_cols,
         _frozen_state=(model.rotation, model.rand_bias, model.centroids_proj),
+    ).index_df.localCheckpoint(eager=True)
+    return rows, codes
+
+
+def _write(
+    model: RaBitQModel,
+    victims: DataFrame | None = None,
+    batch: tuple[DataFrame, DataFrame] | None = None,
+) -> RaBitQModel:
+    """`old ⋈anti victims ∪ batch` over both big tables. The existing
+    tables are never rewritten, so a write costs O(batch) and a loaded
+    index keeps its Parquet partition pruning."""
+    index_df, base_df = model.index_df, model.base_df
+    if victims is not None:
+        index_df = index_df.join(victims, "orig_id", "left_anti")
+        base_df = base_df.join(victims, "orig_id", "left_anti")
+    if batch is not None:
+        rows, codes = batch
+        index_df = index_df.unionByName(codes)
+        base_df = base_df.unionByName(rows)
+    return dc_replace(
+        model, index_df=index_df, base_df=base_df, n_rows=None, vec_store=None
     )
-    return RaBitQModel(
-        config=model.config,
-        dim=model.dim,
-        dim_pad=model.dim_pad,
-        rotation=model.rotation,
-        rand_bias=model.rand_bias,
-        centroids_proj=model.centroids_proj,
-        index_df=model.index_df.unionByName(appended.index_df),
-        base_df=model.base_df.unionByName(appended.base_df),
-    )
+
+
+def append_to_index(model: RaBitQModel, new_base: DataFrame,
+                    id_col: str = "id", vec_col: str = "vec") -> RaBitQModel:
+    """Incrementally index new vectors into an existing model.
+
+    The reference leaves insert/update/delete unimplemented (README.md:18
+    unchecked). Here the new batch is read, quantized with the FROZEN
+    trained state and materialized ONCE, when this is called (see
+    _materialize_batch); the returned model unions those rows onto the
+    existing index/base DataFrames, which are never rewritten. Recall
+    degrades only if the data distribution drifts from the trained
+    centroids — the standard IVF contract (compact_index repairs it).
+
+    Materializing up front is what keeps lookups cheap: a lazy union would
+    re-read and re-quantize every past batch on every search() of the
+    returned model. It also makes the model a snapshot — later changes to
+    the source behind `new_base` do not leak into it. The input model is
+    untouched.
+    """
+    return _write(model, batch=_materialize_batch(model, new_base, id_col, vec_col))
 
 
 def delete_from_index(model: RaBitQModel, ids: DataFrame) -> RaBitQModel:
     """Delete vectors by id (README.md:18's unchecked 'delete').
 
-    `ids` is a one-column DataFrame of ids to drop. Pure anti-join over both
-    big tables — no driver materialization, no rewrite of surviving rows; on
-    a partitioned index the join prunes nothing but touches only metadata
-    columns (codes are never deserialized for the anti side). Returns a new
-    model; the input model is untouched (DataFrames are immutable plans).
+    `ids` is a one-column DataFrame of ids to drop. Its distinct ids are
+    materialized ONCE, when this is called (one small job, executor-held
+    blocks); the returned model anti-joins both big tables against that
+    snapshot, so searches never re-read `ids` and later changes to its
+    source do not leak into the model. Surviving rows are not rewritten.
+    The input model is untouched.
 
     Deletes do NOT retrain centroids — the standard IVF tombstone contract;
     recall is unaffected because surviving codes are unchanged.
     """
     key = ids.columns[0]
     victims = ids.select(F.col(key).alias("orig_id")).distinct()
-    return RaBitQModel(
-        config=model.config,
-        dim=model.dim,
-        dim_pad=model.dim_pad,
-        rotation=model.rotation,
-        rand_bias=model.rand_bias,
-        centroids_proj=model.centroids_proj,
-        index_df=model.index_df.join(victims, "orig_id", "left_anti"),
-        base_df=model.base_df.join(victims, "orig_id", "left_anti"),
-    )
+    return _write(model, victims=victims.localCheckpoint(eager=True))
 
 
 def upsert_into_index(
@@ -244,10 +279,16 @@ def upsert_into_index(
 ) -> RaBitQModel:
     """Upsert = delete-then-append (README.md:18's unchecked
     'insert/update'): rows whose id already exists are replaced, new ids are
-    inserted. One anti-join plus the frozen-transform append — the existing
-    index rows for untouched ids are never recomputed."""
-    replaced = delete_from_index(model, new_base.select(id_col))
-    return append_to_index(replaced, new_base, id_col=id_col, vec_col=vec_col)
+    inserted.
+
+    The batch is read, quantized and materialized ONCE, when this is called
+    (see _materialize_batch), and its materialized ids are the anti-join
+    victims — so a search() of the returned model never re-reads the batch
+    or re-runs its quantize pass, and the model is a snapshot of the batch
+    as it was at call time. Index rows of untouched ids are never
+    recomputed or rewritten: a write costs O(batch)."""
+    rows, codes = _materialize_batch(model, new_base, id_col, vec_col)
+    return _write(model, victims=rows.select("orig_id"), batch=(rows, codes))
 
 
 def compact_index(
@@ -273,8 +314,6 @@ def compact_index(
     `n_clusters` resizes the coarse index (e.g. √n after heavy growth);
     carried attribute columns survive. The input model is untouched.
     """
-    from dataclasses import replace as dc_replace
-
     cfg = model.config
     if n_clusters is not None and n_clusters != cfg.n_clusters:
         cfg = dc_replace(cfg, n_clusters=n_clusters)
@@ -407,38 +446,32 @@ def build_index(
     attr_ddl = "".join(
         f", {c} {base.schema[c].dataType.simpleString()}" for c in attr_cols
     )
-    base = base.select(
-        F.col(id_col).alias("orig_id"), F.col(vec_col).alias("vec"), *attr_cols
-    )
-    if dim_pad != dim:
-        # P5 zero-padding (src/rabitq.rs:167-179)
-        base = base.withColumn(
-            "vec",
-            F.concat("vec", F.array_repeat(F.lit(0.0).cast("float"), dim_pad - dim)),
-        )
-
-    if centroids is None:
-        centroids = _kmeans_centroids(
-            base, "vec", config.n_clusters, config.seed, kmeans_sample_fraction
-        )
-    centroids = centroids.astype(np.float32)
-    if centroids.shape[1] != dim_pad:
-        pad = np.zeros((centroids.shape[0], dim_pad - centroids.shape[1]), np.float32)
-        centroids = np.hstack([centroids, pad])
+    base = _pad_base(base, id_col, vec_col, attr_cols, dim)
 
     if _frozen_state is not None:
         # incremental append: reuse the trained transform so new codes are
         # commensurable with existing ones (see append_to_index)
         rotation, rand_bias, centroids_proj = _frozen_state
-    elif debug_deterministic:
-        # P3 debug generators (src/utils.rs:22-34): P = I, bias = 0.5 make
-        # every stage exactly reproducible and hand-checkable (SURVEY §5.4)
-        rotation = gen_identity_rotation(dim_pad)
-        rand_bias = gen_fixed_bias(dim_pad)
-        centroids_proj = apply_rot(centroids, rotation).astype(np.float32)
     else:
-        rotation = gen_rotation(dim_pad, config.seed)
-        rand_bias = gen_bias(dim_pad, config.seed)
+        if centroids is None:
+            centroids = _kmeans_centroids(
+                base, "vec", config.n_clusters, config.seed, kmeans_sample_fraction
+            )
+        centroids = centroids.astype(np.float32)
+        if centroids.shape[1] != dim_pad:
+            pad = np.zeros(
+                (centroids.shape[0], dim_pad - centroids.shape[1]), np.float32
+            )
+            centroids = np.hstack([centroids, pad])
+        if debug_deterministic:
+            # P3 debug generators (src/utils.rs:22-34): P = I, bias = 0.5
+            # make every stage exactly reproducible and hand-checkable
+            # (SURVEY §5.4)
+            rotation = gen_identity_rotation(dim_pad)
+            rand_bias = gen_fixed_bias(dim_pad)
+        else:
+            rotation = gen_rotation(dim_pad, config.seed)
+            rand_bias = gen_bias(dim_pad, config.seed)
         centroids_proj = apply_rot(centroids, rotation).astype(np.float32)
 
     # Base-side dither for multi-bit codes must be INDEPENDENT of the

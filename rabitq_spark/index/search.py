@@ -150,6 +150,27 @@ def _prepare_probes(
     ).mapInPandas(prep, PROBE_SCHEMA)
 
 
+def _cross_popcount_sql(base_planes: int, query_planes: int, n_words: int) -> str:
+    """Σ_{j<query_planes, i<base_planes} popcount(bplane_i ∧ qplane_j) << (i+j)
+    as Spark SQL, fully UNROLLED over (query plane, base plane, word) into
+    scalar element_at/bit_count terms: the earlier slice+zip_with+aggregate
+    fold allocated per-row arrays, which capped rough scoring at ~1.4 M
+    rows/s and made IVF lose to brute force past ~1e5 candidates (measured,
+    scripts/scaling_probe.py). Every index is a compile-time constant
+    within bounds, so it is ANSI-safe. Sums are left-associated, exactly
+    as the Column operators built them."""
+    shifted = []
+    for j in range(query_planes):
+        for i in range(base_planes):
+            pop = " + ".join(
+                f"bit_count(element_at(code, {i * n_words + w + 1})"
+                f" & element_at(qplanes, {j * n_words + w + 1}))"
+                for w in range(n_words)
+            )
+            shifted.append(f"shiftleft(CAST({pop} AS BIGINT), {i + j})")
+    return " + ".join(shifted)
+
+
 def rough_distance_expr(theta_log_dim: int, n_words: int) -> F.Column:
     """D5 rough-distance estimator as a Column expression
     (src/rabitq.rs:336-367) — pure codegen, no Python.
@@ -158,34 +179,19 @@ def rough_distance_expr(theta_log_dim: int, n_words: int) -> F.Column:
             + (2·asym_dot − scalar_sum)·factor_ip·delta
             − error_bound·sqrt(y_c_dist_sq)
 
-    The popcount sum is fully UNROLLED over (plane, word) into scalar
-    element_at/bit_count terms: the earlier slice+zip_with+aggregate fold
-    allocated per-row arrays, which capped rough scoring at ~1.4 M rows/s
-    and made IVF lose to brute force past ~1e5 candidates (measured,
-    scripts/scaling_probe.py). Unrolled scalar codegen removes every
-    allocation; indexes are compile-time constants within bounds, so it is
-    ANSI-safe.
+    Built as ONE SQL string and parsed by a single F.expr call: composing
+    it from Column operators cost one py4j round-trip per node (thousands
+    per search). The typing is the Column form's: double literals are
+    CAST to DOUBLE (a bare 2.0 parses as DECIMAL) and operands keep the
+    order the Column operators gave them (`2.0 * col` builds col × 2.0),
+    so once the CASTs fold the optimized expression is the Column form's
+    and every rough score is bit-identical.
     """
-    asym = None
-    for p in range(theta_log_dim):
-        pop = None
-        for w in range(n_words):
-            term = F.bit_count(
-                F.element_at(F.col("code"), w + 1).bitwiseAND(
-                    F.element_at(F.col("qplanes"), p * n_words + w + 1)
-                )
-            )
-            pop = term if pop is None else pop + term
-        shifted = F.shiftleft(pop.cast("bigint"), p)
-        asym = shifted if asym is None else asym + shifted
-    return (
-        F.col("center_dist_sq")
-        + F.col("y_c_dist_sq")
-        + F.col("lower_bound") * F.col("factor_ppc")
-        + (2.0 * asym.cast("double") - F.col("scalar_sum"))
-        * F.col("factor_ip")
-        * F.col("delta")
-        - F.col("error_bound") * F.sqrt(F.col("y_c_dist_sq"))
+    asym = _cross_popcount_sql(1, theta_log_dim, n_words)
+    return F.expr(
+        "center_dist_sq + y_c_dist_sq + lower_bound * factor_ppc"
+        f" + (CAST({asym} AS DOUBLE) * CAST(2.0 AS DOUBLE) - scalar_sum)"
+        " * factor_ip * delta - error_bound * SQRT(y_c_dist_sq)"
     )
 
 
@@ -193,7 +199,8 @@ def rough_distance_expr_multibit(
     bits: int, theta_log_dim: int, n_words: int, dim_pad: int
 ) -> F.Column:
     """Symmetric scalar-quantization estimator for multi-bit base codes
-    (config.bits_per_dim ≥ 2) — pure codegen, like rough_distance_expr.
+    (config.bits_per_dim ≥ 2) — pure codegen, like rough_distance_expr,
+    and built the same way (one SQL string, one F.expr call).
 
     Both sides are dithered scalar quantizations of their residuals:
         resid_q ≈ lower_bound + delta · u_q      (query, theta_log_dim bits)
@@ -206,29 +213,15 @@ def rough_distance_expr_multibit(
                 + b_lb·delta·scalar_sum + delta·b_delta·⟨u_q,u_b⟩ )
 
     Unrolled over (query-plane, base-plane, word) — B×4×n_words bit_count
-    terms, every index a compile-time constant (ANSI-safe). Unlike the
-    1-bit RaBitQ estimator this is unbiased with no error-bound subtraction;
-    accuracy comes from the extra base planes."""
-    cross = None
-    for j in range(theta_log_dim):
-        for i in range(bits):
-            pop = None
-            for w in range(n_words):
-                term = F.bit_count(
-                    F.element_at(F.col("code"), i * n_words + w + 1).bitwiseAND(
-                        F.element_at(F.col("qplanes"), j * n_words + w + 1)
-                    )
-                )
-                pop = term if pop is None else pop + term
-            shifted = F.shiftleft(pop.cast("bigint"), i + j)
-            cross = shifted if cross is None else cross + shifted
-    est_ip = (
-        float(dim_pad) * F.col("lower_bound") * F.col("b_lb")
-        + F.col("lower_bound") * F.col("b_delta") * F.col("b_sum")
-        + F.col("b_lb") * F.col("delta") * F.col("scalar_sum")
-        + F.col("delta") * F.col("b_delta") * cross.cast("double")
+    terms. Unlike the 1-bit RaBitQ estimator this is unbiased with no
+    error-bound subtraction; accuracy comes from the extra base planes."""
+    cross = _cross_popcount_sql(bits, theta_log_dim, n_words)
+    return F.expr(
+        "center_dist_sq + y_c_dist_sq - ("
+        f"lower_bound * CAST({float(dim_pad)!r} AS DOUBLE) * b_lb"
+        " + lower_bound * b_delta * b_sum + b_lb * delta * scalar_sum"
+        f" + delta * b_delta * CAST({cross} AS DOUBLE)) * CAST(2.0 AS DOUBLE)"
     )
-    return F.col("center_dist_sq") + F.col("y_c_dist_sq") - 2.0 * est_ip
 
 
 _POPCNT = None
@@ -237,8 +230,9 @@ _POPCNT = None
 def rough_estimator_expr(model) -> F.Column:
     """The bits-aware D5 estimator for a model — the single place the
     single-bit / multi-bit Column selection lives. Shared by search()'s
-    stage-5 jvm plan and search_adaptive's jvm wave scorer, whose
-    'identical results' contract depends on using the same expression."""
+    stage-5 jvm plan, range_search and search_adaptive's jvm wave scorer,
+    whose 'identical results' contract depends on using the same
+    expression."""
     cfg = model.config
     if cfg.bits_per_dim > 1:
         return rough_distance_expr_multibit(
@@ -723,6 +717,11 @@ _ARROW_MIN_PAIRS_MULTIBIT = 2_000_000
 # small-dim probe table with more rows but fewer bytes is equally safe).
 _FUSED_MAX_PROBE_BYTES = 256 << 20
 
+#: Byte budget for the fastscan kernel's unpacked query values (4 bytes per
+#: padded dim per probe row). Past it, search() and search_adaptive's waves
+#: fall back to the popcount kernel — same plan, identical results.
+FASTSCAN_MAX_LUT_BYTES = 256 << 20
+
 
 def search(
     model: RaBitQModel,
@@ -737,7 +736,7 @@ def search(
     impl: str = "auto",
     broadcast_probes: bool = True,
     fused_max_probe_rows: int | None = None,
-    fastscan_max_lut_bytes: int = 256 << 20,
+    fastscan_max_lut_bytes: int | None = None,
     arrow_min_queries_per_cluster: float = 12.0,
     index_predicate=None,
     allowed: "DataFrame | None" = None,
@@ -916,6 +915,8 @@ def search(
             # (2^P−1)(2^B−1) — see value_gemm_asym); past the bound use
             # the popcount kernel — same fused plan, same results
             impl = "fused"
+        if fastscan_max_lut_bytes is None:
+            fastscan_max_lut_bytes = FASTSCAN_MAX_LUT_BYTES
         if impl == "fastscan" and (
             n_probe_rows * 4 * model.dim_pad > fastscan_max_lut_bytes
         ):
@@ -1057,15 +1058,8 @@ def range_search(
         ]
         index = index.filter(F.col("cluster_id").isin(probed))
     probe_side = F.broadcast(probes) if broadcast_probes else probes
-    est = (
-        rough_distance_expr_multibit(
-            cfg.bits_per_dim, cfg.theta_log_dim, model.n_words, model.dim_pad
-        )
-        if cfg.bits_per_dim > 1
-        else rough_distance_expr(cfg.theta_log_dim, model.n_words)
-    )
     cand = index.join(probe_side, "cluster_id").select(
-        "query_id", "orig_id", est.alias("rough")
+        "query_id", "orig_id", rough_estimator_expr(model).alias("rough")
     )
     if rough_cutoff:
         cand = cand.filter(F.col("rough") <= F.lit(radius_sq + rough_margin))

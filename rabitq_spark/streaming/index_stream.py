@@ -64,10 +64,7 @@ def maintain_index_stream(
     search over the union of bootstrapped and streamed vectors.
     """
     spark = vec_stream.sparkSession
-    from rabitq_spark.index.rotation import apply_rot_T
-
     frozen = RaBitQModel.load(spark, model_path)
-    centroids = apply_rot_T(frozen.centroids_proj, frozen.rotation)  # undo projection
 
     def handle(batch_df: DataFrame, _batch_id: int) -> None:
         appended = build_index(
@@ -76,7 +73,6 @@ def maintain_index_stream(
             id_col=id_col,
             vec_col=vec_col,
             dim=frozen.dim,
-            centroids=centroids,
             _frozen_state=(
                 frozen.rotation,
                 frozen.rand_bias,
@@ -157,10 +153,7 @@ def maintain_index_cdc_stream(
     spark = cdc_stream.sparkSession
     from pyspark.sql import functions as F
 
-    from rabitq_spark.index.rotation import apply_rot_T
-
     frozen = RaBitQModel.load(spark, model_path)
-    centroids = apply_rot_T(frozen.centroids_proj, frozen.rotation)
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         seq = int(batch_id)
@@ -178,7 +171,6 @@ def maintain_index_cdc_stream(
             id_col="vec_id",
             vec_col="embedding",
             dim=frozen.dim,
-            centroids=centroids,
             _frozen_state=(
                 frozen.rotation,
                 frozen.rand_bias,

@@ -157,3 +157,37 @@ def test_adaptive_jvm_kernel_equals_popcount(spark, sf_dir):
             .sort_values(["query_id", "rank"], ignore_index=True)
         )
     pd.testing.assert_frame_equal(frames["jvm"], frames["popcount"], check_exact=True)
+
+
+def test_adaptive_fastscan_cap_falls_back_to_popcount(spark, sf_dir, monkeypatch):
+    """Multi-bit waves route to fastscan only under search()'s byte cap
+    on the unpacked query values; past it they must run the popcount
+    kernel and return the identical frame."""
+    import importlib
+
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from rabitq_spark.config import RaBitQConfig
+    from rabitq_spark.index import build_index, search_adaptive
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    base = emb.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec"))
+    queries = emb.filter("vec_id < 8").select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
+    )
+    model = build_index(base, RaBitQConfig(n_clusters=8, nprobe=4, topk=5, bits_per_dim=4))
+    model.index_df = model.index_df.cache()
+
+    def run():
+        stats = {}
+        df = search_adaptive(model, queries, topk=5, overfetch=10**6, stats=stats)
+        return df.toPandas().sort_values(["query_id", "rank"], ignore_index=True), stats
+
+    uncapped, s1 = run()
+    search_mod = importlib.import_module("rabitq_spark.index.search")
+    monkeypatch.setattr(search_mod, "FASTSCAN_MAX_LUT_BYTES", 1)
+    capped, s2 = run()
+    assert set(s1["wave_kernels"]) == {"fastscan"}
+    assert set(s2["wave_kernels"]) == {"popcount"}
+    pd.testing.assert_frame_equal(capped, uncapped, check_exact=True)

@@ -225,3 +225,69 @@ def test_compact_recovers_recall_after_drifted_append(spark):
     # race 1200 rows through 4 probes of a one-sided coarse index
     assert r_comp >= r_stale
     assert r_comp >= 0.9
+
+
+def test_writes_evaluate_their_input_once(spark, attr_model):
+    """An upsert batch and a delete id set are read when the write is
+    called and never again: searching the returned model must not
+    re-evaluate either input. A Python UDF counts every row it sees."""
+    model, emb, queries = attr_model
+    seen = spark.sparkContext.accumulator(0)
+
+    @F.udf("long")
+    def counted(i):
+        seen.add(1)
+        return i
+
+    batch = emb.filter("vec_id < 20").select(
+        counted("vec_id").alias("id"), F.reverse("embedding").alias("vec")
+    )
+    m2 = upsert_into_index(model, batch)
+    assert seen.value == 20  # read exactly once, by the write itself
+    m3 = delete_from_index(m2, emb.filter("vec_id % 9 = 0").select(
+        counted("vec_id").alias("vec_id")
+    ))
+    after_writes = seen.value
+    assert after_writes > 20
+    for _ in range(3):
+        _exhaustive(m3, queries).collect()
+    assert seen.value == after_writes
+
+
+def test_upsert_rounds_then_delete_equal_bruteforce(spark, attr_model):
+    """Three upsert rounds, each replacing ids (some of them rows an
+    earlier round wrote) and adding new ones, then one delete across base
+    and upserted rows: exhaustive search must equal brute force over the
+    final base, bit for bit."""
+    import numpy as np
+
+    model, emb, _ = attr_model
+    rng = np.random.default_rng(3)
+    dim = model.dim
+    truth = {
+        int(r["vec_id"]): list(r["embedding"])
+        for r in emb.select("vec_id", "embedding").collect()
+    }
+    schema = "id bigint, vec array<float>"
+    m = model
+    for rnd in range(3):
+        replace = [i for i in truth if i % 11 == rnd][:15]
+        add = [1000 + 100 * rnd + j for j in range(10)]
+        rows = [
+            (i, [float(x) for x in rng.standard_normal(dim).astype(np.float32)])
+            for i in replace + add
+        ]
+        m = upsert_into_index(m, spark.createDataFrame(rows, schema))
+        truth.update(dict(rows))
+    victims = [i for i in truth if i % 13 == 0 or i in (1001, 1105, 1209)]
+    m = delete_from_index(m, spark.createDataFrame([(i,) for i in victims], "id bigint"))
+    for i in victims:
+        del truth[i]
+    final = spark.createDataFrame(sorted(truth.items()), schema)
+    queries = final.filter("id % 37 = 1 OR id >= 1000").select(
+        F.col("id").alias("query_id"), F.col("vec").alias("qvec")
+    )
+    got = _sorted(_exhaustive(m, queries))
+    want = _sorted(knn_exact(queries, final, K))
+    pd.testing.assert_frame_equal(got, want, check_exact=True)
+    assert m.index_df.count() == m.base_df.count() == len(truth)
