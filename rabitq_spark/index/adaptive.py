@@ -55,14 +55,14 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from rabitq_spark.functions.vector import pad_to_multiple
 from rabitq_spark.index.model import RaBitQModel
 from rabitq_spark.index.rotation import apply_rot
 from rabitq_spark.index.search import (
-    PROBE_SCHEMA,
     _fused_shortlist,
+    _rerank_queries,
     auto_overfetch,
     exact_rerank,
+    probe_dataframe,
     quantize_probe_pairs,
 )
 from rabitq_spark.operators.topk import topk_per_group
@@ -196,10 +196,7 @@ def search_adaptive(
 
     # pre-pad query vectors once for the rerank join (zeros cancel in the
     # exact difference, same as search() stage 7)
-    qv = queries.select(
-        F.col(query_id).alias("query_id"),
-        pad_to_multiple(F.col(query_vec), 64, model.dim).alias("__qvec"),
-    )
+    qv = _rerank_queries(model, queries, query_id, query_vec)
 
     forced_final = False
     while live.any() and waves < 64:
@@ -262,31 +259,16 @@ def search_adaptive(
         ci_arr = np.concatenate(pairs_c)
         probed_total += len(ci_arr)
 
-        cols = quantize_probe_pairs(
-            yp, cp, qi_arr, ci_arr, d2, model.rand_bias, scalar,
-            cfg.theta_log_dim,
-        )
-        # Arrow table (typed, zero-copy) — the pandas/py-object route
-        # rejects numpy scalars in the non-Arrow fallback
-        import pyarrow as pa
-
-        qp = np.vstack(cols["qplanes"])
-        tbl = pa.table(
+        # the wave's probe frame, in the probe table's columns
+        frame = pd.DataFrame(
             {
-                "query_id": pa.array(
-                    np.asarray(q_ids[qi_arr], dtype=np.int64), pa.int64()
+                "query_id": np.asarray(q_ids[qi_arr], dtype=np.int64),
+                **quantize_probe_pairs(
+                    yp, cp, qi_arr, ci_arr, d2, model.rand_bias, scalar,
+                    cfg.theta_log_dim,
                 ),
-                "cluster_id": pa.array(cols["cluster_id"], pa.int32()),
-                "y_c_dist_sq": pa.array(cols["y_c_dist_sq"], pa.float32()),
-                "lower_bound": pa.array(cols["lower_bound"], pa.float32()),
-                "delta": pa.array(cols["delta"], pa.float32()),
-                "scalar_sum": pa.array(cols["scalar_sum"], pa.float32()),
-                "qplanes": pa.FixedSizeListArray.from_arrays(
-                    pa.array(qp.ravel(), pa.int64()), qp.shape[1]
-                ).cast(pa.list_(pa.int64())),
             }
         )
-        probes_df = spark.createDataFrame(tbl, PROBE_SCHEMA)
         wave_kernel = kernel
         if wave_kernel == "auto":
             # per-wave geometry dispatch, the same rule as search(): the
@@ -333,6 +315,7 @@ def search_adaptive(
                 index = index.filter(F.col("cluster_id").isin(probed_set))
             # same estimator expression as search() stage 5 (shared helper
             # — the frame-identity contract depends on it)
+            probes_df = probe_dataframe(spark, frame)
             local = index.join(F.broadcast(probes_df), "cluster_id").select(
                 "query_id", "orig_id",
                 rough_estimator_expr(model).alias("rough"),
@@ -340,7 +323,7 @@ def search_adaptive(
         else:
             local = _fused_shortlist(
                 model,
-                probes_df,
+                frame,
                 r,
                 cfg.theta_log_dim,
                 prune_partitions=True,

@@ -3,10 +3,19 @@
 
 Stages:
   1-4. query prep (pad, rotate, probe selection, per-(query,cluster)
-       residual quantization) — one mapInPandas over the query batch with
-       the rotation matrix + projected centroids broadcast. Emits the probe
-       table: (query_id, cluster_id, y_c_dist_sq, lower_bound, delta,
-       scalar_sum, qplanes).
+       residual quantization), one function (_probe_block) run in one of
+       two places. When the search reads the probe geometry before its
+       action (kernel dispatch, partition pruning), a broadcast-probe
+       batch within _DRIVER_PROBE_MAX_ROWS probe rows and
+       _DRIVER_PROBE_MAX_BYTES of query vectors is collected once and
+       prepared on the driver, as the reference prepares each query
+       in-process (src/rabitq.rs:267-333); the probe table and the
+       rerank's query vectors are both built from that one collected
+       batch. Any other search runs it as one mapInPandas over the query
+       batch with the rotation matrix + projected centroids broadcast.
+       Either way it emits the probe table: (query_id,
+       cluster_id, y_c_dist_sq, lower_bound, delta, scalar_sum, qplanes),
+       the same bits from both places.
   5.   rough scoring — equi-join probes ⋈ index on cluster_id (probe side
        broadcast; index side partition-pruned by the probed cluster set),
        then the D5 estimator as a pure Column expression (whole-stage
@@ -30,6 +39,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from rabitq_spark._blas import can_pin, one_thread
 from rabitq_spark._dist import ensure_package_on_executors
 from rabitq_spark.functions.vector import l2_squared, pad_to_multiple
 from rabitq_spark.index.rotation import apply_rot
@@ -41,6 +51,7 @@ PROBE_SCHEMA = (
     "query_id bigint, cluster_id int, y_c_dist_sq float, lower_bound float, "
     "delta float, scalar_sum float, qplanes array<bigint>"
 )
+PROBE_SCHEMA_COLUMNS = [f.split()[0] for f in PROBE_SCHEMA.split(", ")]
 
 
 def quantize_probe_pairs(
@@ -95,16 +106,102 @@ def quantize_probe_pairs(
     }
 
 
+#: Probe-row bound for preparing a search's probes on the driver. A batch
+#: of at most this many probe rows (queries × min(nprobe, n_clusters)) is
+#: collected once and runs stages 1-4 in the driver process; a larger one
+#: runs them as a mapInPandas job. Measured on a 4-core VM (128 dims, 4-bit
+#: index, 100 clusters, nprobe 3): driver prep costs about 5 µs per probe
+#: row on one BLAS thread (30 rows: 2 ms; 1k: 5 ms; 65,535: 0.31 s; 240k:
+#: 1.25 s), and the query collect about 0.1 s. The probe checkpoint plus
+#: per-cluster count collect that the driver route replaces cost 0.39-0.58 s
+#: on a 10-query batch, so the routes break even near 65k probe rows.
+_DRIVER_PROBE_MAX_ROWS = 65_536
+
+#: Byte bound on the query vectors the driver route collects (they pass
+#: through the driver JVM). It caps the collect's row limit at
+#: bytes / (dim × 8), and a query plan whose size estimate
+#: is already past it skips the collect, so a batch that cannot fit costs
+#: no job beyond the mapInPandas route's.
+_DRIVER_PROBE_MAX_BYTES = 32 << 20
+# Spark's "no estimate" size (spark.sql.defaultSizeInBytes' default)
+_UNKNOWN_PLAN_BYTES = (1 << 63) - 1
+
+#: _probe_block pads its query block to a multiple of this many rows, so
+#: every row takes a full GEMM tile. Measured with numpy 1.26's bundled
+#: OpenBLAS 0.3.23 (Prescott kernels, 4-core x86-64 VM): unpadded, the last
+#: 1-3 rows of a block round differently from the same rows inside a
+#: larger block; padded, no row of 1-1,000-row blocks at any offset
+#: differs, for 1-1,024 output columns. Other OpenBLAS kernels tile
+#: differently; tests/test_driver_probes.py checks the identity on the
+#: machine that runs it.
+_GEMM_TILE_ROWS = 16
+
+
+def _probe_block(
+    pdf: pd.DataFrame,
+    query_id: str,
+    query_vec: str,
+    rot,
+    cp: "np.ndarray",
+    bias: "np.ndarray",
+    nprobe: int,
+    theta_log_dim: int,
+    scalar: "np.float32",
+) -> pd.DataFrame:
+    """Stages 1-4 for one block of queries: pad, rotate, pick the nprobe
+    nearest centroids, quantize each (query, centroid) residual into
+    theta_log_dim bit-planes (P5/P8/P9/P10, src/rabitq.rs:267-333).
+    Returns the probe table rows (PROBE_SCHEMA's columns).
+
+    The one implementation of the probe math: _prepare_probes runs it per
+    Arrow batch on executors, _driver_probes on the whole batch on the
+    driver. Every output row depends on its query alone, whatever block
+    the query arrives in, so both routes give the same bits. Two BLAS
+    effects would otherwise leak the block into a row's products: a
+    multi-threaded GEMM (see _blas), and the edge kernels that take the
+    last rows of a block whose height is not a whole number of tiles (a
+    one-row block even goes to gemv). So the products run on one BLAS
+    thread, over the block padded with zero rows to whole
+    _GEMM_TILE_ROWS tiles."""
+    if pdf.empty:
+        return pd.DataFrame(columns=PROBE_SCHEMA_COLUMNS)
+    dim_pad = cp.shape[1]
+    q = np.vstack(pdf[query_vec].values).astype(np.float32)
+    nq = q.shape[0]
+    # P5 query padding (src/rabitq.rs:276-280) plus the zero tile rows
+    q = np.pad(q, ((0, -nq % _GEMM_TILE_ROWS), (0, dim_pad - q.shape[1])))
+    with one_thread():
+        yp = apply_rot(q, rot).astype(np.float32)  # stage 2 rotate
+        # stage 3: J1 distances to all centroids + top-nprobe
+        cp_sq = (cp**2).sum(axis=1)
+        d2 = (yp**2).sum(axis=1)[:, None] - 2.0 * (yp @ cp.T) + cp_sq[None, :]
+    yp, d2 = yp[:nq], d2[:nq]
+    nb = min(nprobe, cp.shape[0])
+    probe_idx = np.argpartition(d2, nb - 1, axis=1)[:, :nb]  # (nq, nb)
+    cols = quantize_probe_pairs(
+        yp,
+        cp,
+        np.repeat(np.arange(nq), nb),
+        probe_idx.ravel(),
+        d2,
+        bias,
+        scalar,
+        theta_log_dim,
+    )
+    return pd.DataFrame({"query_id": np.repeat(pdf[query_id].values, nb), **cols})
+
+
 def _prepare_probes(
     model: RaBitQModel, queries: DataFrame, query_id: str, query_vec: str, nprobe: int
 ) -> DataFrame:
-    """Stages 1-4: rotate queries, pick nprobe nearest centroids, quantize the
-    per-(query, centroid) residual into 4 bit-planes (P8/P9/P10,
-    src/rabitq.rs:304-317)."""
+    """Stages 1-4 as one mapInPandas job over the query batch, with the
+    rotation, projected centroids and dither broadcast (_probe_block per
+    Arrow batch). search() takes this route for a search that reads no
+    probe geometry before its action, for batches past the driver bounds
+    and for broadcast_probes=False."""
     spark = queries.sparkSession
     ensure_package_on_executors(spark)
     cfg = model.config
-    dim, dim_pad = model.dim, model.dim_pad
     theta_log_dim = cfg.theta_log_dim
     scalar = np.float32(cfg.scalar)
     bc = spark.sparkContext.broadcast(
@@ -113,41 +210,148 @@ def _prepare_probes(
 
     def prep(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         rot, cp, bias = bc.value
-        cp_sq = (cp**2).sum(axis=1)
-        n_words = dim_pad // 64
         for pdf in batches:
-            if pdf.empty:
-                continue
-            q = np.vstack(pdf[query_vec].values).astype(np.float32)
-            if q.shape[1] < dim_pad:  # P5 query padding (src/rabitq.rs:276-280)
-                q = np.hstack(
-                    [q, np.zeros((q.shape[0], dim_pad - q.shape[1]), np.float32)]
+            if not pdf.empty:
+                yield _probe_block(
+                    pdf, query_id, query_vec, rot, cp, bias, nprobe,
+                    theta_log_dim, scalar,
                 )
-            yp = apply_rot(q, rot).astype(np.float32)  # stage 2 rotate
-            # stage 3: J1 distances to all centroids + top-nprobe
-            d2 = (yp**2).sum(axis=1)[:, None] - 2.0 * (yp @ cp.T) + cp_sq[None, :]
-            nq = yp.shape[0]
-            nb = min(nprobe, cp.shape[0])
-            probe_idx = np.argpartition(d2, nb - 1, axis=1)[:, :nb]  # (nq, nb)
-            # stage 4 via the shared flat-pair core (bit-identical to the
-            # former (nq, nb)-shaped inline code: every op is per pair)
-            cols = quantize_probe_pairs(
-                yp,
-                cp,
-                np.repeat(np.arange(nq), nb),
-                probe_idx.ravel(),
-                d2,
-                bias,
-                scalar,
-                theta_log_dim,
-            )
-            yield pd.DataFrame(
-                {"query_id": np.repeat(pdf[query_id].values, nb), **cols}
-            )
 
     return queries.select(
         F.col(query_id).alias(query_id), F.col(query_vec).alias(query_vec)
     ).mapInPandas(prep, PROBE_SCHEMA)
+
+
+def _rerank_queries(
+    model: RaBitQModel, queries: DataFrame, query_id: str, query_vec: str
+) -> DataFrame:
+    """Stage 7's query side, (query_id, __qvec): the query vector padded
+    like base_df's (the zeros cancel in the exact difference)."""
+    return queries.select(
+        F.col(query_id).alias("query_id"),
+        pad_to_multiple(F.col(query_vec), 64, model.dim).alias("__qvec"),
+    )
+
+
+def probe_dataframe(spark, frame: pd.DataFrame) -> DataFrame:
+    """A driver-held probe frame (_probe_block's columns) as a PROBE_SCHEMA
+    DataFrame, shipped as one typed Arrow table: no Python worker reads it,
+    and building it launches no Spark job."""
+    import pyarrow as pa
+
+    qp = (
+        np.vstack(frame["qplanes"].values)
+        if len(frame)
+        else np.zeros((0, 1), np.int64)
+    )
+    tbl = pa.table(
+        {
+            "query_id": pa.array(
+                np.asarray(frame["query_id"].values, dtype=np.int64), pa.int64()
+            ),
+            "cluster_id": pa.array(
+                np.asarray(frame["cluster_id"].values, dtype=np.int32), pa.int32()
+            ),
+            **{
+                c: pa.array(
+                    np.asarray(frame[c].values, dtype=np.float32), pa.float32()
+                )
+                for c in ("y_c_dist_sq", "lower_bound", "delta", "scalar_sum")
+            },
+            "qplanes": pa.FixedSizeListArray.from_arrays(
+                pa.array(qp.ravel(), pa.int64()), qp.shape[1]
+            ).cast(pa.list_(pa.int64())),
+        }
+    )
+    return spark.createDataFrame(tbl, PROBE_SCHEMA)
+
+
+def _plan_bytes(df: DataFrame) -> int:
+    """The optimizer's size estimate for df, in bytes. Spark reports
+    spark.sql.defaultSizeInBytes (Long.MaxValue unless set) when it cannot
+    estimate, e.g. for a DataFrame built from Python rows."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+
+
+def _driver_probes(
+    model: RaBitQModel, queries: DataFrame, query_id: str, query_vec: str, nprobe: int
+) -> "tuple[pd.DataFrame, DataFrame] | None":
+    """Stages 1-4 on the driver, for a batch within _DRIVER_PROBE_MAX_ROWS
+    probe rows and _DRIVER_PROBE_MAX_BYTES of query vectors: one bounded
+    collect of the query batch (limit cap + 1, a single Spark job), then
+    _probe_block over all of it. Returns the probe frame and the rerank
+    query side (_rerank_queries over a DataFrame of the collected batch,
+    with the batch's own column types), so neither reads the query
+    DataFrame again.
+
+    None when the batch does not fit, and the caller then takes the
+    mapInPandas route. A batch whose plan estimate is past the byte bound
+    returns None before any job; one the estimate cannot rule out pays
+    the bounded collect. Without a pinnable BLAS (_blas.can_pin) the
+    driver's products could round differently from the executors', so
+    that case returns None too."""
+    if not can_pin():
+        return None
+    batch_df = queries.select(query_id, query_vec)
+    cap = min(
+        _DRIVER_PROBE_MAX_ROWS // min(nprobe, model.n_clusters),
+        _DRIVER_PROBE_MAX_BYTES // (model.dim * 8),  # at a double's width
+    )
+    estimate = _plan_bytes(batch_df)
+    if cap < 1 or _DRIVER_PROBE_MAX_BYTES < estimate < _UNKNOWN_PLAN_BYTES:
+        return None
+    batch = batch_df.limit(cap + 1).toArrow()
+    if batch.num_rows > cap:
+        return None
+    cfg = model.config
+    frame = _probe_block(
+        batch.to_pandas(), query_id, query_vec, model.rotation,
+        model.centroids_proj, model.rand_bias, nprobe, cfg.theta_log_dim,
+        np.float32(cfg.scalar),
+    )
+    collected = queries.sparkSession.createDataFrame(batch, batch_df.schema)
+    return frame, _rerank_queries(model, collected, query_id, query_vec)
+
+
+def _search_probes(
+    model: RaBitQModel,
+    queries: DataFrame,
+    query_id: str,
+    query_vec: str,
+    nprobe: int,
+    driver: bool,
+) -> "tuple[DataFrame, pd.DataFrame | None, DataFrame]":
+    """(probes, frame, qv) for one search: the probe table, the driver-held
+    probe frame, and the rerank's query side. With `driver` set, a batch
+    _driver_probes accepts takes the driver route, and `frame` is the
+    frame `probes` was built from (probe_dataframe, no job). Otherwise
+    `frame` is None and `probes` is the mapInPandas probe table."""
+    got = (
+        _driver_probes(model, queries, query_id, query_vec, nprobe) if driver else None
+    )
+    if got is None:
+        probes = _prepare_probes(model, queries, query_id, query_vec, nprobe)
+        return probes, None, _rerank_queries(model, queries, query_id, query_vec)
+    frame, qv = got
+    return probe_dataframe(queries.sparkSession, frame), frame, qv
+
+
+def _probe_geometry(
+    probes: DataFrame, frame: "pd.DataFrame | None"
+) -> "tuple[DataFrame, int, list]":
+    """(probes, probe row count, probed cluster ids) — what auto dispatch,
+    the fused-path gates and the partition-pruning IN-list read before the
+    action. Free on the driver route: the frame holds it. On the
+    mapInPandas route the probe table is checkpointed once (executor
+    blocks, lineage cut) and ONE groupBy(cluster_id).count() job
+    (≤ n_clusters result rows) reads it; the returned probes read the
+    blocks, so the prep runs once."""
+    if frame is not None:
+        clusters = sorted(int(c) for c in frame["cluster_id"].unique())
+        return probes, len(frame), clusters
+    probes = probes.localCheckpoint(eager=True)
+    rows = probes.groupBy("cluster_id").count().collect()
+    return probes, int(sum(r["count"] for r in rows)), [r["cluster_id"] for r in rows]
 
 
 def _cross_popcount_sql(base_planes: int, query_planes: int, n_words: int) -> str:
@@ -374,15 +578,16 @@ _FUSED_FLUSH_ROWS = 4_000_000
 
 def _fused_shortlist(
     model: RaBitQModel,
-    probes: DataFrame,
+    ppdf: pd.DataFrame,
     r: int,
     theta_log_dim: int,
     prune_partitions: bool = True,
     kernel: str = "popcount",
 ) -> DataFrame:
     """Alternative stages 5-6: rough-score candidates and keep a local top-R
-    per query inside ONE mapInPandas over the index — the probe table rides
-    as a broadcast keyed by cluster.
+    per query inside ONE mapInPandas over the index — the driver-held probe
+    frame `ppdf` (PROBE_SCHEMA's columns) rides as a broadcast keyed by
+    cluster.
 
     Trades the JVM join+window for numpy batch math plus a much smaller
     window input (≤ R rows per query per index partition instead of every
@@ -408,8 +613,10 @@ def _fused_shortlist(
     rough formula mirrors rough_distance_expr_multibit (unbiased, no
     error-bound term).
     """
-    spark = probes.sparkSession
-    ppdf = probes.toPandas()
+    spark = model.index_df.sparkSession
+    # the scorer is a Python UDF; on the driver probe route nothing else
+    # in the plan has shipped the package to executors yet
+    ensure_package_on_executors(spark)
     n_words = model.n_words
     bits = model.config.bits_per_dim
     dim_pad = model.dim_pad
@@ -617,8 +824,7 @@ def _fused_shortlist(
         yield pd.DataFrame({"query_id": q, "orig_id": i, "rough": ro})
 
     # Partition pruning for free: the probe table is already on the driver,
-    # so the probed cluster set costs no extra Spark job (unlike the jvm
-    # path's distinct().collect()).
+    # so the probed cluster set costs no extra Spark job.
     index = model.index_df
     if prune_partitions and 2 * len(by_cluster) <= model.n_clusters:
         index = index.filter(F.col("cluster_id").isin(list(by_cluster)))
@@ -770,6 +976,16 @@ def search(
     model.n_rows when the builder recorded it and otherwise n_clusters
     itself (exact under the standard n_clusters ≈ √n sizing).
 
+    Stages 1-4 (probe prep) run on the driver when the search needs the
+    probe geometry before its action (an Arrow kernel's gates, or
+    partition pruning), `broadcast_probes` is set and the batch fits
+    _DRIVER_PROBE_MAX_ROWS probe rows (queries × min(nprobe, n_clusters))
+    and _DRIVER_PROBE_MAX_BYTES of query vectors: search() collects the
+    query batch once, in one bounded Spark job, and builds both the probe
+    table and the rerank's query side from it. Otherwise they run as a
+    mapInPandas job (_prepare_probes), inside the action when the search
+    needs no geometry; the two routes give bit-identical probe rows.
+
     `impl` picks the rough-scoring implementation — all three produce
     bit-identical frames (impl-equality tests): "jvm" is the codegen
     broadcast-join plan, "fused" the Arrow popcount kernel, "fastscan" the
@@ -777,15 +993,17 @@ def search(
     search from the probe geometry: multi-bit codes route to fastscan and
     1-bit codes to fused once the estimated pair-score volume clears the
     measured floors (_ARROW_MIN_PAIRS*); small searches stay on the jvm
-    join — see the dispatch block for the measurements.
+    join — see the dispatch block for the measurements. On the driver
+    probe route the geometry (probe rows, probed clusters, queries per
+    cluster) comes from the driver-held probe frame, so auto dispatch and
+    the partition-pruning IN-list launch no Spark job; on the mapInPandas
+    route they cost a probe checkpoint plus one collect.
     """
     cfg = model.config
     topk = topk or cfg.topk
     nprobe = nprobe or cfg.nprobe
     if overfetch is None:
         overfetch = auto_overfetch(model, nprobe, topk)
-
-    probes = _prepare_probes(model, queries, query_id, query_vec, nprobe)
 
     index = model.index_df
     if index_predicate is not None:
@@ -808,16 +1026,17 @@ def search(
         impl = "fastscan" if cfg.bits_per_dim > 1 else "fused"
         if nprobe * 2 > model.n_clusters:
             # High-coverage regime (the same gate that disables partition
-            # pruning): the batch scans most of the index, so the jvm path
-            # pays ZERO driver-side jobs here while resolving the Arrow
-            # geometry would add a checkpoint + collect per search — at
-            # the sf0.1 headline shape (nprobe 28 of 32 clusters, 2k rows)
-            # that job alone is ~10% of the whole search. Coverage this
-            # wide on a big index is the cost-rule's brute-force territory
-            # anyway (operators/ann.py), so auto keeps the join plan and
-            # every remaining auto resolution below coincides with the
-            # pruning job the jvm path pays regardless — net added jobs
-            # from auto dispatch: zero.
+            # pruning): the batch scans most of the index, so on the
+            # mapInPandas probe route the jvm path pays ZERO driver-side
+            # jobs here while resolving the Arrow geometry would add a
+            # checkpoint + collect per search — at the sf0.1 headline
+            # shape (nprobe 28 of 32 clusters, 2k rows) that job alone is
+            # ~10% of the whole search. Coverage this wide on a big index
+            # is the cost-rule's brute-force territory anyway
+            # (operators/ann.py), so auto keeps the join plan and every
+            # remaining auto resolution below coincides with the pruning
+            # job the jvm path pays regardless — net added jobs from auto
+            # dispatch: zero.
             impl = "jvm"
     if impl in ("fused", "fastscan") and (
         index_predicate is not None or allowed is not None
@@ -827,22 +1046,18 @@ def search(
         # per-plane shift-add in _fused_shortlist)
         impl = "jvm"
     r = max(topk * overfetch, topk)
-    probes_materialized = False
-    probed_clusters: list | None = None  # collected once, reused by pruning
+    prune = prune_partitions and nprobe * 2 <= model.n_clusters
+    # The Arrow kernels' gates and the pruning IN-list read the probe
+    # geometry before the action. Only then does the mapInPandas route
+    # launch jobs in this call (a checkpoint and a collect), so only then
+    # does the driver route, whose query collect is a job too, remove one.
+    geometry = impl in ("fused", "fastscan") or prune
+    probes, frame, qv = _search_probes(
+        model, queries, query_id, query_vec, nprobe, broadcast_probes and geometry
+    )
+    if geometry:
+        probes, n_probe_rows, probed_clusters = _probe_geometry(probes, frame)
     if impl in ("fused", "fastscan"):
-        # Gate (round-2 verdict): the fused path materializes the whole
-        # probe table on the driver. Checkpoint once (executor blocks), then
-        # ONE groupBy(cluster_id).count() job (≤ n_clusters result rows)
-        # yields the probe row count, the probed-cluster list AND the
-        # queries-per-cluster geometry — round 12: this replaces the former
-        # count() + distinct().collect() pair, one job instead of two.
-        probes = probes.localCheckpoint(eager=True)
-        probes_materialized = True
-        cluster_rows = (
-            probes.groupBy("cluster_id").count().collect()
-        )
-        probed_clusters = [row["cluster_id"] for row in cluster_rows]
-        n_probe_rows = int(sum(row["count"] for row in cluster_rows))
         # Driver-memory gate: the row cap (round-2) bounded the probe
         # table the fused path materializes. An EXPLICIT caller cap stays a
         # hard row limit (the round-2 contract; tests pin it); the default
@@ -928,15 +1143,16 @@ def search(
             # which shares every other property of the fused plan
             impl = "fused"
     if impl in ("fused", "fastscan"):
-        # Stages 5-6 fused in one Arrow pass (see _fused_shortlist); it
-        # collects the probe table itself and derives partition pruning
-        # from it, so no separate pruning job here. impl="fastscan" swaps
+        # Stages 5-6 fused in one Arrow pass (see _fused_shortlist) over
+        # the driver-held probe frame (collected here on the mapInPandas
+        # route); it derives partition pruning from the frame, so no
+        # separate pruning job here. impl="fastscan" swaps
         # the popcount estimator kernel for the unpacked-value GEMM
         # (value_gemm_asym) — identical results (impl-equality test),
         # faster on large clusters.
         local = _fused_shortlist(
             model,
-            probes,
+            frame if frame is not None else probes.toPandas(),
             r,
             cfg.theta_log_dim,
             prune_partitions=prune_partitions,
@@ -950,23 +1166,12 @@ def search(
             local, ["query_id"], [F.col("rough").asc(), F.col("orig_id").asc()], r
         ).select("query_id", "orig_id")
     else:
-        if prune_partitions and nprobe * 2 <= model.n_clusters:
+        if prune:
             # Static partition pruning: the probed cluster set is tiny (≤ nq ×
             # nprobe); pushing it into the scan as an IN-filter prunes Parquet
             # partitions — the analogue of the reference's CSR offsets scan
             # (src/rabitq.rs:348). For very large query batches, skip (all
-            # clusters probed anyway). localCheckpoint materializes the
-            # mapInPandas probe prep ONCE (executor blocks, lineage cut);
-            # both the pruning collect and the broadcast join below read the
-            # blocks — previously the whole rotate/argpartition/quantize
-            # stage ran twice per search.
-            if not probes_materialized:
-                probes = probes.localCheckpoint(eager=True)
-            if probed_clusters is None:
-                probed_clusters = [
-                    row.cluster_id
-                    for row in probes.select("cluster_id").distinct().collect()
-                ]
+            # clusters probed anyway). The set comes from _probe_geometry.
             index = index.filter(F.col("cluster_id").isin(probed_clusters))
         # Stage 5: J2 equi-join + D5 estimator. Typical query batches make
         # the probe table small → broadcast; a huge batch (probe table
@@ -1004,15 +1209,10 @@ def search(
             metrics.precise, F.count(F.lit(1)).alias("precise_count")
         )
 
-    # Stage 7: exact rerank on original vectors (J3 + D1 + final top-k).
-    # base_df is padded; pad the query the same way (zeros cancel in the
-    # difference, so dist equals the unpadded exact distance). When the
-    # model carries a vec store, the rerank gathers candidate rows instead
-    # of scanning base — see exact_rerank.
-    qv = queries.select(
-        F.col(query_id).alias("query_id"),
-        pad_to_multiple(F.col(query_vec), 64, model.dim).alias("__qvec"),
-    )
+    # Stage 7: exact rerank on original vectors (J3 + D1 + final top-k)
+    # against qv, the padded query side (_rerank_queries). When the model
+    # carries a vec store, the rerank gathers candidate rows instead of
+    # scanning base — see exact_rerank.
     exact = exact_rerank(model, shortlist, qv, metrics=metrics)
     return topk_per_group(
         exact, ["query_id"], [F.col("dist").asc(), F.col("neighbor_id").asc()], topk
@@ -1047,15 +1247,15 @@ def range_search(
     """
     cfg = model.config
     nprobe = nprobe or cfg.nprobe
-    probes = _prepare_probes(model, queries, query_id, query_vec, nprobe)
-
+    prune = prune_partitions and nprobe * 2 <= model.n_clusters
+    # as in search(): the driver route only where pruning needs the
+    # probed cluster set before the action
+    probes, frame, qv = _search_probes(
+        model, queries, query_id, query_vec, nprobe, broadcast_probes and prune
+    )
     index = model.index_df
-    if prune_partitions and nprobe * 2 <= model.n_clusters:
-        probes = probes.localCheckpoint(eager=True)
-        probed = [
-            row.cluster_id
-            for row in probes.select("cluster_id").distinct().collect()
-        ]
+    if prune:
+        probes, _, probed = _probe_geometry(probes, frame)
         index = index.filter(F.col("cluster_id").isin(probed))
     probe_side = F.broadcast(probes) if broadcast_probes else probes
     cand = index.join(probe_side, "cluster_id").select(
@@ -1064,9 +1264,5 @@ def range_search(
     if rough_cutoff:
         cand = cand.filter(F.col("rough") <= F.lit(radius_sq + rough_margin))
 
-    qv = queries.select(
-        F.col(query_id).alias("query_id"),
-        pad_to_multiple(F.col(query_vec), 64, model.dim).alias("__qvec"),
-    )
     exact = exact_rerank(model, cand.select("query_id", "orig_id"), qv)
     return exact.filter(F.col("dist") <= F.lit(radius_sq))

@@ -1,7 +1,9 @@
 """Capture .explain("formatted") for named registry queries into
-plans/r11/<query>_<tag>.txt (judge-auditable before/after evidence).
+plans/r14/<query>_<tag>.txt of the checkout holding this script
+(before/after evidence for a plan change). $SPARK_GRAFT_PLANS_OUT
+overrides the directory.
 
-Usage: PYTHONPATH=/root/repo python scripts/capture_plans.py TAG name [name ...]
+Usage: python scripts/capture_plans.py TAG name [name ...]
        TAG is e.g. 'before' or 'after'.
 
 Streaming-sink queries (stream_*) execute their stream during query
@@ -14,11 +16,12 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from rabitq_spark.session import get_spark  # noqa: E402
 
-OUT = os.environ.get("SPARK_GRAFT_PLANS_OUT", "/root/repo/plans/r12")
+OUT = os.environ.get("SPARK_GRAFT_PLANS_OUT", os.path.join(ROOT, "plans", "r14"))
 
 
 def main() -> None:

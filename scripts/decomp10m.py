@@ -60,7 +60,7 @@ def main() -> None:
 
     probes = _prepare_probes(model, q200, "query_id", "qvec", 16)
     t("prepare_probes_200q_collectless", lambda: probes.count())
-    local = _fused_shortlist(model, probes, r, 4, kernel="fastscan")
+    local = _fused_shortlist(model, probes.toPandas(), r, 4, kernel="fastscan")
     t("fused_shortlist_200q_noop", lambda: local.write.format("noop").mode("overwrite").save())
     t("search_200q_fastscan", lambda: search(
         model, q200, impl="fastscan", arrow_min_queries_per_cluster=0,
